@@ -31,7 +31,7 @@ import org.apache.spark.sql.types.{ArrayType, FloatType}
   *    nodes; per-key structure identical).
   *
   * Emits one `SCALE <op> mult=<m> rows=<n> t=<s> out=<n>` line per
-  * measurement and writes the aggregate as JSON to SCALE_r8.json (or
+  * measurement and writes the aggregate as JSON to SCALE_r10.json (or
   * `--out <path>`), which ScaleLinearitySpec gates: wall-clock growth
   * per 4× step must stay ≤ 1.3× linear and pair outputs must not blow
   * up super-linearly. Each row also carries the measured SHUFFLE and
@@ -244,7 +244,7 @@ object ScaleProbe {
       if (i >= 0) {
         if (i + 1 >= args.length) usage("--out requires a path argument")
         (args(i + 1), args.patch(i, Nil, 2).toSeq)
-      } else ("SCALE_r8.json", args.toSeq)
+      } else ("SCALE_r10.json", args.toSeq)
     }
     // --ops a,b,c limits the run to named families (corpora build lazily,
     // so a targeted 64x point doesn't pay the full-suite 64x cost)

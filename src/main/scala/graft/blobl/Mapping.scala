@@ -4,6 +4,7 @@ import scala.collection.mutable
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.model.EnvRow
 
 import Ast._
 
@@ -58,9 +59,24 @@ object Mapping {
 
   /** Compile a bare Bloblang expression against an envelope DataFrame
     * (`this` = doc, meta/_error/content/batch available). */
-  def envelopeExpr(df: DataFrame, src: String): Column = {
-    Compiler.compile(Parser.parseQueryString(src), envelopeCtx(df)).col
-  }
+  def envelopeExpr(df: DataFrame, src: String): Column = envelopeExpr(EnvRow.of(df), src)
+
+  /** The same over one envelope row's columns (`graft.ops.RowWise`). */
+  def envelopeExpr(in: EnvRow, src: String): Column =
+    Compiler.compile(Parser.parseQueryString(src), envelopeCtx(in)).col
+
+  /** Functions and methods whose value depends on rows other than the
+    * current one: count(), the batch windows, and bloblang(), whose dynamic
+    * form probes the input's rows. A mapping or check that calls one cannot
+    * be fused into a projection over a wider row set. */
+  private val CrossRow =
+    Set("count", "batch_index", "batch_size", "from", "from_all", "bloblang")
+
+  def readsAcrossRows(check: String): Boolean =
+    Targets.callsAny(Parser.parseQueryString(check), CrossRow)
+
+  private[blobl] def readsAcrossRows(prog: Program): Boolean =
+    Targets.callsAny(prog, CrossRow)
 
   /** Per-row-computed `bloblang(mapping)` (plugins/bloblang.go dynamic
     * case): a mapping STRING computed from data has no static Catalyst
@@ -164,7 +180,9 @@ object Mapping {
     if (found) stmts.map(rwS) else stmts
   }
 
-  def envelopeCtx(df: DataFrame): Ctx = {
+  def envelopeCtx(df: DataFrame): Ctx = envelopeCtx(EnvRow.of(df))
+
+  def envelopeCtx(in: EnvRow): Ctx = {
     import graft.model.Envelope._
     // `this`/json() carry the reference's parse-error semantics ("json
     // catch" vectors): when raw content exists but is not valid JSON and
@@ -173,14 +191,18 @@ object Mapping {
     // parses to a JSON null and stays null). The condition only reaches
     // the plan if a catch/or consumes it.
     val parseErr = when(
-      col(Content).isNotNull && col(Doc).isNull &&
-        try_parse_json(col(Content).cast(StringType)).isNull,
+      in.content.isNotNull && in.doc.isNull &&
+        try_parse_json(in.content.cast(StringType)).isNull,
       lit("unable to parse message as JSON"))
     Ctx(
-      thisTC = TC(col(Doc), Some(df.schema(Doc).dataType), Some(parseErr)),
-      meta = Some(col(Meta)), err = Some(col(Error)), content = Some(col(Content)),
-      vars = Map.empty, maps = Map.empty,
-      batch = if (df.columns.contains(BatchId)) Some((col(BatchId), col(Seq))) else None)
+      thisTC = TC(in.doc, Some(in.docType), Some(parseErr)),
+      meta = Some(in.meta), err = Some(in.err), content = Some(in.content),
+      vars = Map.empty, maps = Map.empty, batch = batchCols(in.frame))
+  }
+
+  private[blobl] def batchCols(df: DataFrame): Option[(Column, Column)] = {
+    import graft.model.Envelope._
+    if (df.columns.contains(BatchId)) Some((col(BatchId), col(Seq))) else None
   }
 
   private[blobl] def plainCtx(df: DataFrame): Ctx = {
@@ -474,34 +496,32 @@ final class CompiledMapping(val program: Program,
   /** Run on an envelope DataFrame (content/doc/meta/_error/batch_id/seq). */
   def applyEnvelope(df0: DataFrame): DataFrame = {
     import graft.model.Envelope._
-    val docType = df0.schema(Doc).dataType
-    val hasBatch = df0.columns.contains(BatchId)
     // count() needs a global 1-based stream index: precompute it with the
     // partitioned two-pass assignment instead of a single-partition window
-    val usesCount = hasBatch && !df0.isStreaming &&
-      Targets.usesFunction(program, "count")
-    val df =
-      if (usesCount)
-        graft.model.Envelope.withGlobalSeq(
-          df0, scala.Seq(col(Seq), col(BatchId)), "_graft_count")
-      else df0
+    val usesCount = df0.columns.contains(BatchId) && !df0.isStreaming &&
+      Targets.callsAny(program, Set("count"))
+    if (usesCount)
+      envelopeRow(
+        EnvRow.of(withGlobalSeq(df0, scala.Seq(col(Seq), col(BatchId)), "_graft_count")),
+        Some(col("_graft_count") + lit(1L))).project
+    else envelopeRow(EnvRow.of(df0), None).project
+  }
+
+  /** The mapping as columns over one envelope row, for fusing into an
+    * enclosing projection (`graft.ops.RowWise`). None for a mapping that
+    * reads across rows (`Mapping.readsAcrossRows`). */
+  def applyRow(in: EnvRow): Option[EnvRow] =
+    if (Mapping.readsAcrossRows(program)) None else Some(envelopeRow(in, None))
+
+  private def envelopeRow(in: EnvRow, countCol: Option[Column]): EnvRow = {
     val ctx = Ctx(
-      thisTC = TC(col(Doc), Some(docType)),
-      meta = Some(col(Meta)), err = Some(col(Error)),
-      content = Some(col(Content)),
-      vars = Map.empty, maps = mapDefs,
-      batch = if (hasBatch) Some((col(BatchId), col(Seq))) else None,
-      countCol = if (usesCount) Some(col("_graft_count") + lit(1L)) else None,
-      envOverride = env)
-    val (docTC, deleteCond, metaCol, errCol) = run(df, ctx)
-    val filtered = deleteCond.map(c => df.filter(!coalesce(c, lit(false)))).getOrElse(df)
-    filtered.select(
-      lit(null).cast(BinaryType).as(Content),
-      docTC.col.as(Doc),
-      metaCol.as(Meta),
-      errCol.as(Error),
-      col(BatchId).as(BatchId),
-      col(Seq).as(Seq))
+      thisTC = TC(in.doc, Some(in.docType)),
+      meta = Some(in.meta), err = Some(in.err), content = Some(in.content),
+      vars = Map.empty, maps = mapDefs, batch = Mapping.batchCols(in.frame),
+      countCol = countCol, envOverride = env)
+    val (docTC, deleteCond, metaCol, errCol) = run(in.frame, ctx)
+    EnvRow(in.frame, lit(null).cast(BinaryType), docTC.col, metaCol, errCol,
+      deleteCond.fold(in.dropped)(c => in.orDropped(coalesce(c, lit(false)))))
   }
 
   /** Shared statement walk. Returns (root doc, row-delete cond, meta col,

@@ -9,19 +9,26 @@ import Ast._
   * auto-order `workflow` branches into a DAG. */
 object Targets {
 
-  /** Whether the program calls function `name` anywhere (statements, map
-    * definitions, nested expressions). Used by Mapping.applyEnvelope to
-    * precompute columns that need a whole-DataFrame pass (e.g. count()). */
-  def usesFunction(prog: Program, name: String): Boolean = {
-    def inE(e: Expr): Boolean = e match {
-      case FnCall(n, args) => n == name || args.exists(inE)
-      case other => childrenOf(other).exists(inE)
-    }
-    def inStmts(stmts: List[Stmt]): Boolean = stmts.exists {
-      case Assign(_, v) => inE(v)
-      case MapDef(_, ss) => inStmts(ss)
-    }
-    inStmts(prog.stmts)
+  /** Whether `e` calls a function or method named in `names`. Used to find
+    * mappings that need a whole-DataFrame pass (e.g. count()) or read
+    * across rows. */
+  def callsAny(e: Expr, names: Set[String]): Boolean = exists(e, {
+    case FnCall(n, _) => names(n)
+    case MethodCall(_, n, _) => names(n)
+    case _ => false
+  })
+
+  /** The same anywhere in the program (statements, map definitions). */
+  def callsAny(prog: Program, names: Set[String]): Boolean =
+    prog.stmts.exists(inStmt(_, e => callsAny(e, names)))
+
+  private def exists(e: Expr, p: Expr => Boolean): Boolean =
+    p(e) || childrenOf(e).exists(exists(_, p))
+
+  private def inStmt(s: Stmt, p: Expr => Boolean): Boolean = s match {
+    case Assign(_, v) => exists(v, p)
+    case MapDef(_, ss) => ss.exists(inStmt(_, p))
+    case _ => false
   }
 
   /** Doc paths read from `this` anywhere in the program. */

@@ -148,4 +148,82 @@ object Envelope {
     * them — "failed messages keep flowing"). */
   def flagError(df: DataFrame, cond: Column, msg: Column): DataFrame =
     df.withColumn(Error, when(col(Error).isNotNull, col(Error)).otherwise(when(cond, msg)))
+
+  /** The doc type that every one of `types` conforms to: the struct fields
+    * present in any of them (first-seen order), merged recursively through
+    * structs and array elements. Leaf types that differ are left to Spark's
+    * own widening at the `CASE WHEN` or union that combines the docs. */
+  def unifyDocTypes(types: scala.Seq[DataType]): DataType =
+    types.reduce { (a, b) =>
+      (a, b) match {
+        case (NullType, t) => t
+        case (t, NullType) => t
+        case (sa: StructType, sb: StructType) =>
+          StructType(sa.fields.map { f =>
+            sb.fields.find(_.name == f.name) match {
+              case Some(g) => StructField(f.name,
+                unifyDocTypes(scala.Seq(f.dataType, g.dataType)), f.nullable || g.nullable)
+              case None => f.copy(nullable = true)
+            }
+          } ++ sb.fields.filterNot(g => sa.fieldNames.contains(g.name))
+            .map(_.copy(nullable = true)))
+        case (ArrayType(ea, na), ArrayType(eb, nb)) =>
+          ArrayType(unifyDocTypes(scala.Seq(ea, eb)), na || nb)
+        case (t, _) => t
+      }
+    }
+
+  /** `doc` (of type `from`) reshaped to `to` (from `unifyDocTypes`): struct
+    * fields it lacks become typed nulls and fields take `to`'s order. A doc
+    * that already has `to`'s shape is returned as it is. */
+  def conformDoc(doc: Column, from: DataType, to: DataType): Column =
+    if (fits(from, to)) doc
+    else (from, to) match {
+      case (f: StructType, t: StructType) =>
+        when(doc.isNotNull, struct(t.fields.toIndexedSeq.map { tf =>
+          f.fields.find(_.name == tf.name)
+            .map(ff => conformDoc(doc.getField(tf.name), ff.dataType, tf.dataType))
+            .getOrElse(lit(null).cast(tf.dataType))
+            .as(tf.name)
+        }: _*))
+      case (ArrayType(f, _), ArrayType(t, _)) => transform(doc, x => conformDoc(x, f, t))
+      case _ => doc.cast(to)
+    }
+
+  private def fits(from: DataType, to: DataType): Boolean = (from, to) match {
+    case (f: StructType, t: StructType) =>
+      f.fieldNames.sameElements(t.fieldNames) &&
+        f.fields.zip(t.fields).forall(p => fits(p._1.dataType, p._2.dataType))
+    case (ArrayType(f, _), ArrayType(t, _)) => fits(f, t)
+    case (NullType, t) => t == NullType
+    case _ => true
+  }
+}
+
+/** One envelope row as columns over `frame`: what a row-wise processor
+  * (`graft.ops.RowWise`) computes in place of a new DataFrame. Every column
+  * resolves against `frame`, so a chain of row-wise steps stays one filter
+  * and one projection over it. `dropped` (never null) is when the row leaves
+  * the stream; batch_id and seq pass through. */
+final case class EnvRow(frame: DataFrame, content: Column, doc: Column,
+    meta: Column, err: Column, dropped: Column) {
+  import Envelope._
+
+  lazy val docType: DataType =
+    if (doc == col(Doc)) frame.schema(Doc).dataType
+    else frame.select(doc).schema.head.dataType
+
+  /** `dropped || c`, without the constant when nothing is dropped yet. */
+  def orDropped(c: Column): Column = if (dropped == lit(false)) c else dropped || c
+
+  /** The rows as an envelope DataFrame. */
+  def project: DataFrame =
+    (if (dropped == lit(false)) frame else frame.filter(!dropped)).select(
+      content.as(Content), doc.as(Doc), meta.as(Meta), err.as(Error), col(BatchId), col(Seq))
+}
+
+object EnvRow {
+  import Envelope._
+  def of(df: DataFrame): EnvRow =
+    EnvRow(df, col(Content), col(Doc), col(Meta), col(Error), lit(false))
 }

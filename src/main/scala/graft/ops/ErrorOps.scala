@@ -1,9 +1,9 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.blobl.{Mapping => Blobl}
-import graft.model.Envelope
+import graft.model.{Envelope, EnvRow}
 
 /** Error-flag discipline (`_error` column): the reference's core semantic
   * that failed messages keep flowing with a flag, inspected by try/catch
@@ -47,40 +47,34 @@ object ErrorOps {
     }
   }
 
+  /** Arm 0 for rows without `_error`, arm 1 for errored rows. */
+  private def byError(in: EnvRow): Column = when(in.err.isNull, lit(0)).otherwise(lit(1))
+
   /** `try` (`lib/processor/try.go`): children run only on non-errored rows;
-    * errored rows pass through untouched. Implemented as split → transform →
-    * union, exact for row-wise children. */
-  final case class TryProc(children: scala.Seq[Processor]) extends Processor {
-    def apply(df: DataFrame): DataFrame = {
-      val ok = df.filter(col(Envelope.Error).isNull)
-      val err = df.filter(col(Envelope.Error).isNotNull)
-      Pipeline(children)(ok).unionByName(err, allowMissingColumns = false)
-    }
+    * errored rows pass through untouched. Fused into one projection when
+    * the children are row-wise, else split → transform → union (`Routed`). */
+  final case class TryProc(children: scala.Seq[Processor]) extends Routed {
+    def arms: scala.Seq[Routed.Arm] = scala.Seq(Routed.Arm(children), Routed.Arm(Nil))
+    protected def tag(in: EnvRow): Column = byError(in)
   }
 
   /** try+catch fused: ok rows run `tryProcs`, errored rows run `catchProcs`
-    * and get their flag cleared. Use when the two arms produce the SAME doc
-    * schema (required for the union); the common Benthos idiom
-    * `try: [...]` followed by `catch: [...]` compiles to this. */
+    * and get their flag cleared; the common Benthos idiom `try: [...]`
+    * followed by `catch: [...]` compiles to this. One projection when both
+    * arms are row-wise, else split → transform → union (`Routed`). */
   final case class TryCatch(tryProcs: scala.Seq[Processor], catchProcs: scala.Seq[Processor])
-      extends Processor {
-    def apply(df: DataFrame): DataFrame = {
-      val ok = Pipeline(tryProcs)(df.filter(col(Envelope.Error).isNull))
-      val repaired = Pipeline(catchProcs)(df.filter(col(Envelope.Error).isNotNull))
-        .withColumn(Envelope.Error, lit(null).cast("string"))
-      ok.unionByName(repaired)
-    }
+      extends Routed {
+    def arms: scala.Seq[Routed.Arm] =
+      scala.Seq(Routed.Arm(tryProcs), Routed.Arm(catchProcs, repair = true))
+    protected def tag(in: EnvRow): Column = byError(in)
   }
 
   /** `catch` (`lib/processor/catch.go`): children run ONLY on errored rows;
-    * the flag is cleared afterwards. */
-  final case class CatchProc(children: scala.Seq[Processor]) extends Processor {
-    def apply(df: DataFrame): DataFrame = {
-      val ok = df.filter(col(Envelope.Error).isNull)
-      val err = df.filter(col(Envelope.Error).isNotNull)
-      val repaired = Pipeline(children)(err)
-        .withColumn(Envelope.Error, lit(null).cast("string"))
-      ok.unionByName(repaired)
-    }
+    * the flag is cleared afterwards. Fused into one projection when the
+    * children are row-wise, else split → transform → union (`Routed`). */
+  final case class CatchProc(children: scala.Seq[Processor]) extends Routed {
+    def arms: scala.Seq[Routed.Arm] =
+      scala.Seq(Routed.Arm(Nil), Routed.Arm(children, repair = true))
+    protected def tag(in: EnvRow): Column = byError(in)
   }
 }

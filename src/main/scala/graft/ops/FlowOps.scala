@@ -3,25 +3,34 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.blobl.{Mapping => Blobl}
+import graft.model.EnvRow
 import graft.model.Envelope._
 
 /** Flow-control / composition operators (SURVEY §2.1 flow table). */
 object FlowOps {
 
-  /** `switch` (`lib/processor/switch.go`): case list with optional
-    * fall-through. Each case = filtered sub-pipeline; results union. A case
-    * with check None is a default (matches everything unmatched). */
-  final case class Switch(cases: scala.Seq[(Option[String], scala.Seq[Processor])]) extends Processor {
-    def apply(df: DataFrame): DataFrame = {
+  /** `switch` (`lib/processor/switch.go`): each row goes to the first case
+    * whose check holds; a case with check None is a default (it matches
+    * every row no earlier case took). Rows that match no case are dropped
+    * when there is no default. Fall-through is not supported (the config
+    * loader rejects `fallthrough: true`). Fused into one projection when
+    * every case is row-wise, else filtered sub-pipelines unioned by name
+    * (`Routed`). */
+  final case class Switch(cases: scala.Seq[(Option[String], scala.Seq[Processor])])
+      extends Routed {
+    def arms: scala.Seq[Routed.Arm] = cases.map(c => Routed.Arm(c._2))
+
+    override protected def tagRowWise: Boolean =
+      cases.forall(_._1.forall(c => !Blobl.readsAcrossRows(c)))
+
+    protected def tag(in: EnvRow): Column = {
       val conds: scala.Seq[Column] = cases.map {
-        case (Some(check), _) => coalesce(Blobl.envelopeExpr(df, check), lit(false))
+        case (Some(check), _) => coalesce(Blobl.envelopeExpr(in, check), lit(false))
         case (None, _) => lit(true)
       }
-      val outs = cases.zipWithIndex.map { case ((_, procs), i) =>
-        val notEarlier = conds.take(i).foldLeft(lit(true))((a, c) => a && !c)
-        Pipeline(procs)(df.filter(notEarlier && conds(i)))
+      conds.zipWithIndex.tail.foldLeft(when(conds.head, lit(0))) {
+        case (acc, (c, i)) => acc.when(c, lit(i))
       }
-      outs.reduce(_.unionByName(_))
     }
   }
 

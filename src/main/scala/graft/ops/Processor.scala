@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.blobl.{CompiledMapping, Mapping => Blobl}
-import graft.model.Envelope
+import graft.model.{Envelope, EnvRow}
 
 /** A pipeline operator: `DataFrame => DataFrame` over the envelope schema
   * (SURVEY §1.3). This is the Spark shape of the reference's `Processor`
@@ -16,6 +16,26 @@ trait Processor extends Serializable {
   def apply(df: DataFrame): DataFrame
 }
 
+/** A processor that maps each row to at most one row and can say so as
+  * columns: `row` computes its output over one envelope row (`EnvRow`), so
+  * an enclosing `switch`/`try`/`catch` (`Routed`) can fuse it into a single
+  * projection. `row` is None when this instance reads across rows (e.g. a
+  * mapping that calls `count()`); the enclosing processor then runs `apply`
+  * on a filtered DataFrame instead. */
+trait RowWise extends Processor {
+  def row(in: EnvRow): Option[EnvRow]
+}
+
+object RowWise {
+  /** `procs` applied in order over one row; None unless every step is
+    * row-wise. */
+  def chain(procs: scala.Seq[Processor], in: EnvRow): Option[EnvRow] =
+    procs.foldLeft(Option(in)) {
+      case (Some(r), p: RowWise) => p.row(r)
+      case _ => None
+    }
+}
+
 /** Sequential composition; the config `pipeline.processors` list.
   * (`lib/processor/util.go:16` ExecuteAll — a left fold.) */
 final case class Pipeline(procs: scala.Seq[Processor]) extends Processor {
@@ -23,7 +43,10 @@ final case class Pipeline(procs: scala.Seq[Processor]) extends Processor {
 }
 
 /** `noop` (`lib/processor/noop.go`). */
-case object Noop extends Processor { def apply(df: DataFrame): DataFrame = df }
+case object Noop extends RowWise {
+  def apply(df: DataFrame): DataFrame = df
+  def row(in: EnvRow): Option[EnvRow] = Some(in)
+}
 
 /** `for_each` / `parallel` (`lib/processor/for_each.go`, `parallel.go`):
   * Spark is already per-row parallel — compiler no-op wrappers. */
@@ -33,10 +56,11 @@ final case class ForEach(children: scala.Seq[Processor]) extends Processor {
 
 /** `bloblang` processor (`lib/processor/bloblang.go`): the centerpiece. */
 final case class BloblangProc(mapping: String,
-    env: Map[String, String] = Map.empty) extends Processor {
+    env: Map[String, String] = Map.empty) extends RowWise {
   @transient private lazy val compiled: CompiledMapping =
     Blobl.compile(mapping).withEnv(env)
   def apply(df: DataFrame): DataFrame = compiled.applyEnvelope(df)
+  def row(in: EnvRow): Option[EnvRow] = compiled.applyRow(in)
 }
 
 /** `filter`/`filter_parts` (`lib/processor/filter.go`): keep rows where the

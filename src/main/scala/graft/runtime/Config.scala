@@ -60,9 +60,9 @@ object Config {
       // per-micro-batch key write-back run at the sink (the shared named
       // cache is a cross-pipeline resource — lib/processor/dedupe.go:32-58)
       val dedupes = pipeline.flatMap(collectCachedDedupes)
-      val hook: org.apache.spark.sql.DataFrame => Unit =
-        if (dedupes.isEmpty) _ => ()
-        else batch => dedupes.foreach(_.writeBack(batch))
+      val hook = Option.when(dedupes.nonEmpty) {
+        (batch: org.apache.spark.sql.DataFrame) => dedupes.foreach(_.writeBack(batch))
+      }
       graft.streaming.Streaming.run(
         Pipeline(pipeline)(input(spark)), output, checkpoint, t, hook)
     }
@@ -607,10 +607,14 @@ object Config {
             asList(gm("processors")).map(p => compileProcessor(asMap(p))))
         })
       case "switch" =>
-        F.Switch(asList(m(kind)).map { c =>
+        F.Switch(asList(m(kind)).zipWithIndex.map { case (c, i) =>
           val cm = asMap(c)
-          (cm.get("check").map(condString).filter(_.nonEmpty),
-            asList(cm("processors")).map(p => compileProcessor(asMap(p))))
+          val check = cm.get("check").map(condString).filter(_.nonEmpty)
+          if (cm.get("fallthrough").exists(_.toString == "true"))
+            throw new IllegalArgumentException(
+              s"switch: case $i (check: ${check.getOrElse("<default>")}) sets " +
+                "fallthrough: true, which is not supported")
+          (check, asList(cm("processors")).map(p => compileProcessor(asMap(p))))
         })
       case "while" =>
         F.WhileProc(condString(conf("check")),

@@ -76,18 +76,24 @@ object Streaming {
     * interval + per-micro-batch batch_id (foreachBatch assigns it). */
   def run(df: DataFrame, sink: Sink, checkpoint: String,
       trigger: Trigger = Trigger.ProcessingTime("1 second"),
-      onBatch: DataFrame => Unit = _ => ()): StreamingQuery =
+      onBatch: Option[DataFrame => Unit] = None): StreamingQuery =
     df.writeStream
       .option("checkpointLocation", checkpoint)
       .outputMode(OutputMode.Append)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, id: Long) =>
-        sink.write(batch.withColumn(Envelope.BatchId, lit(id)))
-        // post-delivery hooks (e.g. cache-backed dedupe key write-back):
-        // run AFTER the sink so a write-back never records keys for rows
-        // the sink failed to deliver (same at-least-once posture as the
-        // reference's ack-then-cache-set ordering)
-        onBatch(batch)
+        // the sink write and a post-delivery hook are two actions over the
+        // batch: persist it so the stateful plan (and its state-store
+        // commit) runs once, not once per action
+        onBatch.foreach(_ => batch.persist())
+        try {
+          sink.write(batch.withColumn(Envelope.BatchId, lit(id)))
+          // post-delivery hooks (e.g. cache-backed dedupe key write-back):
+          // run AFTER the sink so a write-back never records keys for rows
+          // the sink failed to deliver (same at-least-once posture as the
+          // reference's ack-then-cache-set ordering)
+          onBatch.foreach(_(batch))
+        } finally onBatch.foreach(_ => batch.unpersist())
       }
       .start()
 

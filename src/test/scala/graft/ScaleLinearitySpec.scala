@@ -19,8 +19,11 @@ import org.scalatest.funsuite.AnyFunSuite
   *
   * The artifact is committed rather than re-measured per test run: the
   * probe takes minutes at 16× and timing under sbt-test co-scheduling
-  * is meaningless. Re-generate with
-  * `sbt "runMain graft.ScaleProbe"` after touching any probed operator.
+  * is meaningless. After touching any probed operator, re-generate
+  * SCALE_r10.json (the probe's default output, 1×/4×/16×) on an idle box
+  * with `SPARK_DRIVER_MEM=32g sbt "runMain graft.ScaleProbe"`, and the
+  * deeper points of a family in the 64× or 256× sets with
+  * `--out SCALE_r10_64x.json --ops <op> 64` (or `_256x` and `256`).
   */
 class ScaleLinearitySpec extends AnyFunSuite {
   private val LinearSlack = 1.3 // per 4× step: ≤ 1.3 × linear growth
@@ -70,7 +73,7 @@ class ScaleLinearitySpec extends AnyFunSuite {
 
   private lazy val points: Seq[P] = {
     val f = new java.io.File("SCALE_r10.json")
-    assert(f.exists, "SCALE_r10.json missing — run `sbt \"runMain graft.ScaleProbe\"`")
+    assert(f.exists, "SCALE_r10.json missing — run `SPARK_DRIVER_MEM=32g sbt \"runMain graft.ScaleProbe\"`")
     // the worst-growing families carry an extra 64× point (probed with
     // --ops so the full suite doesn't pay 64× corpus cost); merging it
     // here puts the deeper tail under the same step + slope gates

@@ -429,6 +429,27 @@ class StreamingSpec extends AnyFunSuite {
       == scala.Seq("fresh"))
   }
 
+  test("a post-delivery hook reads the delivered micro-batch, not a re-run of its plan") {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import spark.implicits._
+    implicit val sqlc: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val ms = MemoryStream[Long]
+    ms.addData(1L to 5L)
+    val evaluated = spark.sparkContext.longAccumulator("hook-rows-evaluated")
+    val touch = udf { (x: Long) => evaluated.add(1); x }.asNondeterministic()
+    val sink = new graft.sinks.Sink {
+      def write(df: org.apache.spark.sql.DataFrame): Unit =
+        df.write.format("noop").mode("overwrite").save()
+    }
+    var hooked = 0L
+    val q = Streaming.run(ms.toDF().select(touch(col("value")).as("v")), sink,
+      Files.createTempDirectory("graft-hook-ck").toString,
+      onBatch = Some(b => hooked += b.collect().length))
+    q.processAllAvailable(); q.stop()
+    assert(hooked == 5L)
+    assert(evaluated.value == 5L, "the sink write and the hook must share one evaluation")
+  }
+
   test("streaming near-dup dedupe: micro-batches check against the accumulated corpus index") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import spark.implicits._
